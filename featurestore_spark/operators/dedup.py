@@ -753,13 +753,14 @@ def dedup_keep_best(
 
     Scale shape: the same collapsed machinery as the rest of the
     family — LSH candidates + Jaccard verify over DISTINCT texts only,
-    linear rep→member star edges, iterative min-label propagation over
-    id-keyed joins (`resolve.connected_components`; edges are
-    verified near-dup pairs, so components are small and converge in
-    a few rounds), then ONE row_number window per cluster for the
-    argmax. Docs in no cluster never enter the window with a skewed
-    key: cluster_id = own id, so the window partitioning is ~unique
-    per row outside real clusters."""
+    linear rep→member star edges, connected components
+    (`resolve.connected_components`: edges are verified near-dup
+    pairs, a small graph that its union-find local phase usually
+    settles in one pass, global rounds only for components that
+    straddle its partitions), then ONE row_number window per cluster
+    for the argmax. Docs in no cluster never enter the window with a
+    skewed key: cluster_id = own id, so the window partitioning is
+    ~unique per row outside real clusters."""
     from featurestore_spark.operators.resolve import connected_components
 
     edges = minhash_dedup_edges(

@@ -34,8 +34,8 @@ Set once on the session::
     spark.conf.set("spark.featurestore.materialize", "reliable")
     spark.sparkContext.setCheckpointDir("hdfs:///tmp/fs_ckpt")
 
-Every mode runs Spark jobs AT CALL TIME — see docs/usage.md
-("Eager operators") for which operators trigger this.
+Every mode runs Spark jobs AT CALL TIME (unless `eager=False`) — see
+docs/usage.md ("Eager operators") for which operators trigger this.
 """
 
 from __future__ import annotations
@@ -46,11 +46,14 @@ MATERIALIZE_CONF = "spark.featurestore.materialize"
 _MODES = ("local", "reliable")
 
 
-def materialize(df: DataFrame) -> DataFrame:
-    """Eagerly materialize `df` per the session's durability mode."""
+def materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
+    """Materialize `df` per the session's durability mode. With
+    `eager=False` the barrier only marks the frame: its first action
+    writes it (iterative plans that only need lineage truncation, such
+    as PageRank's rank frames)."""
     mode = df.sparkSession.conf.get(MATERIALIZE_CONF, "local")
     if mode == "local":
-        return df.localCheckpoint(eager=True)
+        return df.localCheckpoint(eager=eager)
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
@@ -58,7 +61,7 @@ def materialize(df: DataFrame) -> DataFrame:
                 f"{MATERIALIZE_CONF}=reliable requires "
                 "SparkContext.setCheckpointDir(...) to be set"
             )
-        return df.checkpoint(eager=True)
+        return df.checkpoint(eager=eager)
     raise ValueError(
         f"unknown {MATERIALIZE_CONF}={mode!r}; expected one of {_MODES}"
     )

@@ -3,27 +3,101 @@
 The reference attempted a GraphX Pregel walk over the id-mapping graph
 (star/CustomerResolver.scala:26-100) and shipped it self-described as
 "not ready" (line 14). Rebuild implements the *intent* — resolve every
-id to a canonical entity across mapping tables — as iterative
-DataFrame joins (connected components via label propagation to the
-minimum id), which needs no graph library and scales as a sequence of
-shuffles on uniformly-hashed keys.
+id to a canonical entity across mapping tables — as connected
+components labelled by the minimum id, in two phases and with no graph
+library:
 
-Convergence: components' diameters in id-crosswalk graphs are tiny
-(id→email→phone chains), so the loop usually terminates in 3-5
-rounds; `max_iterations` bounds the worst case. Each round is one
-join + aggregate; intermediate results are eagerly materialized (see
-`operators.materialize` for the local-vs-reliable durability knob) to
-cut the exponentially growing lineage.
+1. **Local phase** — one Arrow-batched pass. The edges go through a
+   REBALANCE shuffle keyed by source id, which AQE may coalesce (or
+   split where one id is skewed); each partition runs a
+   numpy union-find over its own edges and emits a star
+   `(node, local_min)` for every node it holds. The star frame is
+   materialized once.
+2. **Global phase** — only when some node carries two different local
+   minima, i.e. its component straddles partitions. Min-label rounds
+   with pointer jumping run over the contracted star edges, one
+   materialization and one in-row change probe per round, so a path
+   of diameter D settles in O(log D) rounds.
+
+Id-crosswalk and near-dup graphs are small and shallow, so the
+shuffle before the local phase usually coalesces into one partition.
+The local output then is the answer and the global phase never runs.
 """
 
 from __future__ import annotations
 
+import logging
 import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from featurestore_spark.operators.materialize import materialize
+
+log = logging.getLogger(__name__)
+
+
+def _min_roots(n: int, u, v):
+    """Union-find over dense node indices 0..n-1: returns `root` with
+    root[i] = the smallest index in i's component. Each pass hooks the
+    larger root of every unsettled edge under the smaller one, then
+    pointer-jumps until every node points at a root; pointers only
+    ever decrease, so the root of a tree is its minimum. Every tree
+    with an unsettled edge merges in each pass, so the tree count at
+    least halves per pass."""
+    import numpy as np
+
+    root = np.arange(n, dtype=np.int64)
+    while u.size:
+        ru, rv = root[u], root[v]
+        live = ru != rv
+        u, v, ru, rv = u[live], v[live], ru[live], rv[live]
+        np.minimum.at(root, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = root[root]
+            if np.array_equal(jumped, root):
+                break
+            root = jumped
+    return root
+
+
+def _local_stars(batches):
+    """mapInArrow body: one partition's (a, b) edges → one
+    (id, component) row per node, component = the smallest node that
+    the partition's own edges connect it to. Nodes are sorted in
+    Arrow's binary order, which is Spark's `min` order for numbers
+    and UTF8_BINARY strings. A NULL endpoint is no edge: the other
+    endpoint stays a node, and the partition emits one (NULL, NULL)
+    row."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches).combine_chunks()
+    a, b = t.column("a").chunk(0), t.column("b").chunk(0)
+    nodes = pc.unique(pa.concat_arrays([a, b]).drop_null())
+    nodes = nodes.take(pc.sort_indices(nodes))
+    both = pc.and_(a.is_valid(), b.is_valid())
+    u = pc.index_in(a.filter(both), value_set=nodes)
+    v = pc.index_in(b.filter(both), value_set=nodes)
+    root = _min_roots(
+        len(nodes),
+        u.to_numpy(zero_copy_only=False),
+        v.to_numpy(zero_copy_only=False),
+    )
+    ids, comps = nodes, nodes.take(root)
+    if a.null_count or b.null_count:
+        null = pa.nulls(1, type=nodes.type)
+        ids = pa.concat_arrays([ids, null])
+        comps = pa.concat_arrays([comps, null])
+    yield pa.RecordBatch.from_arrays([ids, comps], names=["id", "component"])
+
+
+def _changed(frame: DataFrame) -> bool:
+    return bool(frame.where(F.col("_chg")).limit(1).count())
 
 
 def connected_components(
@@ -32,171 +106,139 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iterations: int = 20,
-    checkpoint_every: int = 2,
-    probe_every: int = 2,
-    shortcut_after: int = 5,
 ) -> DataFrame:
-    """(id, component) — component = min id reachable (label
-    propagation / "small-star" style contraction).
+    """(id, component) — one row per id seen in any edge, component =
+    the minimum id of its connected component. A NULL endpoint adds
+    no edge: the other endpoint is still a node, and NULL itself gets
+    one (NULL, NULL) row.
 
-    `probe_every`: run the convergence-probe job only every k rounds.
-    Labels are monotone non-increasing under min-propagation, so
-    "unchanged since the last probe" ⇔ "no round in between changed
-    anything" — probing across k rounds is exact, not a heuristic.
-    Each skipped probe saves one Spark job; rounds still materialize
-    every `checkpoint_every` so lineage stays flat either way. The
-    default (2, matching probe_every) materializes exactly on probe
-    rounds: per-round materialization was measured pure overhead
-    (q_dedup_clusters 4.4s -> 3.6s at sf0.1), and the un-materialized
-    lineage between probes is bounded at checkpoint_every rounds.
-
-    `shortcut_after`: plain min-propagation advances labels ONE hop
-    per round — a path of diameter D needs D rounds (measured: a
-    10^4-node chain would run for hours; PLANS.md r5). From round
-    `shortcut_after` onward each round adds a pointer-jumping step,
-    comp(u) ← comp(comp(u)) — one extra self-join on the slim label
-    frame that HALVES the remaining depth, so convergence is
-    O(shortcut_after + log D). The threshold exists because the
-    near-dup/crosswalk graphs this serves have tiny diameters and
-    converge in 2-4 rounds — they never pay for the extra join
-    (path-halving from round 0 was measured slower on exactly those
-    graphs) — while anything still unconverged after `shortcut_after`
-    rounds is deep and needs the logarithmic gear. 0 = always jump;
-    a value ≥ max_iterations restores pure one-hop propagation.
-    Jumps keep labels within the component and monotone
-    non-increasing, so convergence probes and the fixed point are
-    unchanged.
+    The local phase counts as round 1 of `max_iterations`; it is the
+    only round when every node comes out of it with one local minimum
+    (always the case when the local phase ran as one partition). Each
+    further round is one global min-label step plus a pointer jump
+    comp(u) ← comp(comp(u)), materialized and probed for change.
 
     Warns if `max_iterations` is exhausted while labels were still
-    changing (component diameter > max_iterations): the returned
-    labels are then PARTIAL — ids in one component may carry
-    different labels. Raise `max_iterations` for deep graphs. The
-    exhaustion probe compares the LAST round against the round before
-    it (an iteration with no change is a fixed point), so a graph that
-    converges exactly on the final round is not misreported as partial
-    even when the change landed mid-probe-window (ADVICE r3).
-    """
-    if probe_every < 1:
-        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    # undirected: symmetrize once, then MATERIALIZE — every iteration
-    # (and every convergence probe) joins against the edge list, and an
-    # unmaterialized lineage would re-run the whole upstream pipeline
-    # (e.g. shingle→minhash→LSH for dedup clustering) once per job.
-    # Measured on q_dedup_clusters at sf0.1: 7.7s → materialized edges
-    # make each round touch only the (tiny) vertex/edge frames.
-    # Symmetrize with ONE pass over the edge lineage: a self-union's
-    # two branches each execute the full upstream plan (ReuseExchange
-    # does not fire across union branches), so when `edges` is a
-    # computed pair list (LSH candidates + verify) the verify tail ran
-    # twice inside the materialization job. explode(array(fwd, rev))
-    # reads each input row once and emits both directions (r14).
-    sym = (
+    changing: the returned labels are then PARTIAL — ids in one
+    component may carry different labels. The probe compares each
+    round with the one before it, so a graph that converges exactly on
+    the final round is not reported as partial.
+
+    Logs one INFO record per call: local-phase partitions, whether the
+    local phase settled the graph, rounds run and convergence (also as
+    the record attributes `cc_partitions`, `cc_settled`, `cc_rounds`,
+    `cc_converged`)."""
+    id_type = edges.select(
+        F.array(F.col(src_col), F.col(dst_col)).alias("_t")
+    ).schema["_t"].dataType.elementType
+    star_schema = StructType(
+        [StructField("id", id_type), StructField("component", id_type)]
+    )
+    # Round 1: the local phase. The REBALANCE shuffle has no fixed
+    # partition count: AQE coalesces a small edge list into one
+    # partition — where the local answer is the global one — and
+    # splits a hub id's oversized partition instead of handing it to
+    # one Python worker.
+    stars = materialize(
         edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("a"), F.col(src_col).alias("b")
-                    ),
-                )
-            ).alias("_e")
+            F.col(src_col).cast(id_type).alias("a"),
+            F.col(dst_col).cast(id_type).alias("b"),
         )
-        .select("_e.a", "_e.b")
-        .distinct()
+        .hint("rebalance", "a")
+        .mapInArrow(_local_stars, star_schema)
     )
-    sym = materialize(sym)
-    # Round 1 FUSED into initialization (r15, guide §2.4 "remove
-    # shuffles outright"): labels₁(u) = min(u, min over neighbors) is
-    # one groupBy over the symmetrized edges — the separate
-    # node-distinct pass plus a full union+groupBy round the old
-    # init+round-1 pair paid are gone. NULL ids keep a NULL label (a
-    # NULL never joins as a neighbor, matching the old propagation).
-    # `_chg` carries the round's convergence bit IN the frame: the
-    # probe becomes a limit-1 scan of the materialized labels instead
-    # of a labels⋈labels join job per probe (the r14 profile showed
-    # the CC family spends ~half its wall in per-job driver gaps).
-    labels = materialize(
-        sym.groupBy("a")
-        .agg(F.min("b").alias("_mb"))
-        .select(
-            F.col("a").alias("id"),
-            F.when(
-                F.col("a").isNotNull(), F.least("a", "_mb")
-            ).alias("component"),
-            (F.least("a", "_mb") < F.col("a")).alias("_chg"),
-        )
-    )
-
-    def _changed(frame: DataFrame) -> bool:
-        # one-round-exact under monotone min-propagation: "no label
-        # changed in round k" ⇔ fixed point, regardless of earlier
-        # rounds — so a per-round flag makes every probe exact.
-        return bool(frame.where(F.col("_chg")).limit(1).count())
-
-    converged = not _changed(labels)
-    i = 1  # the fused init IS iteration 1
-    while not converged and i < max_iterations:
-        i += 1
-        # each node adopts the min component among itself + neighbors;
-        # the self rows carry their current component in `_old` so the
-        # round's change flag falls out of the same aggregation
-        neighbor_labels = (
-            sym.join(
-                labels.select(F.col("id").alias("b"), "component"), "b"
+    partitions = stars.rdd.getNumPartitions()
+    rounds = 1
+    if partitions == 1:
+        labels, settled, converged = stars, True, True
+    else:
+        # One id per row again, and the settled test in the same
+        # aggregation: the stars are final iff no id got two local
+        # minima. Along every edge both ends share a local root, so a
+        # single label per id is constant on each component; the
+        # component minimum is its own root wherever it appears.
+        labels = materialize(
+            stars.groupBy("id").agg(
+                F.min("component").alias("component"),
+                (F.min("component") < F.max("component")).alias("_chg"),
             )
+        )
+        settled = converged = not _changed(labels)
+    if not settled:
+        # NULL is no node of the star graph; it rejoins at the end
+        null_row = labels.where(F.col("id").isNull()).select("id", "component")
+        # Contracted graph: node — local minimum, both directions. The
+        # stars are materialized, so this is a narrow scan per round.
+        sym = (
+            stars.where(F.col("id") != F.col("component"))
             .select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("id").alias("a"),
+                                 F.col("component").alias("b")),
+                        F.struct(F.col("component").alias("a"),
+                                 F.col("id").alias("b")),
+                    )
+                ).alias("_e")
+            )
+            .select("_e.a", "_e.b")
+        )
+        labels = labels.where(F.col("id").isNotNull())
+        while not converged and rounds < max_iterations:
+            rounds += 1
+            # each node adopts the min component among itself and its
+            # neighbours; the self rows carry their current component
+            # in `_old` so the change flag falls out of the same
+            # aggregation
+            neighbor_labels = sym.join(
+                labels.select(F.col("id").alias("b"), "component"), "b"
+            ).select(
                 F.col("a").alias("id"),
                 "component",
-                F.lit(None).cast(labels.schema["component"].dataType)
-                .alias("_old"),
+                F.lit(None).cast(id_type).alias("_old"),
             )
-        )
-        new_labels = (
-            labels.select("id", "component", F.col("component").alias("_old"))
-            .unionByName(neighbor_labels)
-            .groupBy("id")
-            .agg(
-                F.min("component").alias("component"),
-                F.min("_old").alias("_old"),
+            hop = (
+                labels.select(
+                    "id", "component", F.col("component").alias("_old")
+                )
+                .unionByName(neighbor_labels)
+                .groupBy("id")
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min("_old").alias("_old"),
+                )
             )
-        )
-        if i > shortcut_after:
-            # pointer jump: comp(u) ← comp(comp(u)). Every label value
-            # is itself a node id with a label row, so the mapping
-            # join is total; the jump target is in u's component and
-            # ≤ the current label (monotone). Halves remaining depth.
-            new_labels = (
-                new_labels.join(
-                    new_labels.select(
+            # pointer jump: every label is itself a node id with a
+            # label row, so the join is total; the jump target lies in
+            # u's component and is ≤ the current label (monotone)
+            labels = materialize(
+                hop.join(
+                    hop.select(
                         F.col("id").alias("component"),
                         F.col("component").alias("_jump"),
                     ),
                     "component",
+                ).select(
+                    "id",
+                    F.col("_jump").alias("component"),
+                    (F.col("_jump") < F.col("_old")).alias("_chg"),
                 )
-                .select("id", F.col("_jump").alias("component"), "_old")
             )
-        new_labels = new_labels.select(
-            "id",
-            "component",
-            (F.col("component") < F.col("_old")).alias("_chg"),
-        )
-        final = i == max_iterations
-        probing = i % probe_every == 0 or final
-        # materialize BEFORE any probe so the probe job reads this
-        # round's result instead of recomputing the join; the probe
-        # itself is then a limit-1 scan of checkpointed partitions
-        if i % checkpoint_every == 0 or probing:
-            new_labels = materialize(new_labels)
-        labels = new_labels
-        if probing and not _changed(labels):
-            converged = True
-    labels = labels.select("id", "component")
+            # one-round-exact: labels only ever decrease, so a round
+            # that changes nothing is the fixed point
+            converged = not _changed(labels)
+        labels = labels.select("id", "component").unionByName(null_row)
+    log.info(
+        "connected_components: local phase on %d partition(s), "
+        "settled=%s, %d round(s) including the local phase, converged=%s",
+        partitions, settled, rounds, converged,
+        extra={
+            "cc_partitions": partitions,
+            "cc_settled": settled,
+            "cc_rounds": rounds,
+            "cc_converged": converged,
+        },
+    )
     if not converged:
         warnings.warn(
             f"connected_components: max_iterations={max_iterations} "
@@ -206,7 +248,7 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    return labels
+    return labels.select("id", "component")
 
 
 def resolve_entities(
@@ -217,7 +259,6 @@ def resolve_entities(
     confidence_col: str | None = "confidence",
     min_confidence: float = 0.0,
     max_iterations: int = 20,
-    shortcut_after: int = 5,
 ) -> DataFrame:
     """Canonical entity per id across mapping tables: edges above the
     confidence floor, components labeled by min entity id.
@@ -225,15 +266,13 @@ def resolve_entities(
     Returns (entity_id, canonical_id) for every id seen in a mapping
     (CustomerResolver intent: find the target id of type X reachable
     with confidence ≥ c; here: canonical representative + join back).
-    `shortcut_after` forwards to `connected_components` (pointer
-    jumping for deep crosswalk chains).
     """
     edges = mappings
     if confidence_col is not None and confidence_col in mappings.columns:
         edges = edges.where(F.col(confidence_col) >= min_confidence)
     comp = connected_components(
         edges.select(src_col, dst_col), src_col=src_col, dst_col=dst_col,
-        max_iterations=max_iterations, shortcut_after=shortcut_after,
+        max_iterations=max_iterations,
     )
     return comp.select(
         F.col("id").alias("entity_id"), F.col("component").alias("canonical_id")

@@ -719,16 +719,18 @@ def domain_pagerank(
     ~1e8 rows of two short columns.
 
     ``checkpoint_every`` (default 1) truncates the rank frame's
-    lineage with a lazy ``localCheckpoint`` every that-many
-    iterations. This is NOT an optimization knob: each iteration
-    reads the previous rank frame twice (contribution join + dangling
-    mass), and because both sides also descend from ``edges``,
-    analysis clones the shared subtree per self-join — without
-    truncation the logical plan (and analyzer time/driver heap) grows
-    EXPONENTIALLY in the iteration count, the classic iterative-
-    algorithm failure mode on Spark. ``None`` disables truncation
-    (keeps the whole dataflow one inspectable pure plan — fine for
-    1-2 iterations in plan tests; do not run deep loops with it).
+    lineage with a lazy ``materialize`` barrier every that-many
+    iterations (``spark.featurestore.materialize=reliable`` covers it
+    like every other barrier). This is NOT an optimization knob: each
+    iteration reads the previous rank frame twice (contribution join +
+    dangling mass), and because both sides also descend from
+    ``edges``, analysis clones the shared subtree per self-join —
+    without truncation the logical plan (and analyzer time/driver
+    heap) grows EXPONENTIALLY in the iteration count, the classic
+    iterative-algorithm failure mode on Spark. ``None`` disables
+    truncation (keeps the whole dataflow one inspectable pure plan —
+    fine for 1-2 iterations in plan tests; do not run deep loops with
+    it).
 
     ``seed_ranks`` (a previous output's (domain, pr) frame) resumes
     iteration instead of restarting from uniform — the against-index
@@ -749,6 +751,8 @@ def domain_pagerank(
         raise ValueError(
             f"checkpoint_every must be >= 1 or None: {checkpoint_every}"
         )
+    from featurestore_spark.operators.materialize import materialize
+
     w = (
         F.col(weight_col).cast("double")
         if weight_col is not None
@@ -768,7 +772,7 @@ def domain_pagerank(
         # re-execute it again per read (the pre-r14 placement derived
         # them from the PRE-checkpoint plan, so building `base` ran
         # the upstream three times before the first iteration).
-        e = e.localCheckpoint(eager=False)
+        e = materialize(e, eager=False)
     nodes = (
         # one pass over the edge frame: explode(array(src, dst))
         # instead of a self-union, whose branches each re-read `e`
@@ -791,7 +795,7 @@ def domain_pagerank(
         .crossJoin(n_row)
     )
     if checkpoint_every is not None:
-        base = base.localCheckpoint(eager=False)
+        base = materialize(base, eager=False)
     if seed_ranks is None:
         ranks = base.withColumn("pr", F.lit(1.0) / F.col("_n"))
     else:
@@ -848,5 +852,5 @@ def domain_pagerank(
             )
         )
         if checkpoint_every is not None and (it + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = materialize(ranks, eager=False)
     return ranks.select("domain", "pr")

@@ -7131,7 +7131,7 @@ def _pagerank_iter_sql(prev: str, cur: str) -> str:
     "hosts are their own registrable domain) while src domains ride "
     "the shared _WEB_SQL dom CTE. Per iteration the plan is one "
     "src-keyed join + one dst-keyed groupBy + two broadcast one-row "
-    "scalar attaches; rank lineage is localCheckpoint-truncated so "
+    "scalar attaches; rank lineage is checkpoint-truncated so "
     "the analyzed plan stays linear in the iteration count.",
 )
 def q_domain_pagerank(spark, sf_dir):

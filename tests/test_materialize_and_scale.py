@@ -84,9 +84,10 @@ def test_materialize_modes_equivalent(spark, small_docs, tmp_path):
 
 
 def test_connected_components_reliable_mode(spark, tmp_path):
-    """The iterative CC loop materializes per round — in `reliable`
-    mode every round checkpoints to the checkpoint dir and the labels
-    must be identical to local mode (the 100-TB long-job shape)."""
+    """CC materializes its local-phase stars (and each global round) —
+    in `reliable` mode they checkpoint to the checkpoint dir and the
+    labels must be identical to local mode (the 100-TB long-job
+    shape)."""
     from featurestore_spark.operators.resolve import connected_components
 
     edges = spark.createDataFrame(
@@ -109,6 +110,73 @@ def test_connected_components_reliable_mode(spark, tmp_path):
     # the reliable run actually wrote checkpoint data
     ckpts = list((tmp_path / "cc_ckpt").rglob("*"))
     assert ckpts, "no reliable checkpoint files written"
+
+
+def test_reliable_mode_never_local_checkpoints(spark, tmp_path, monkeypatch):
+    """`reliable` must cover every barrier, the lazy ones included:
+    with `DataFrame.localCheckpoint` raising, PageRank, connected
+    components (local and global phase) and `dedup_keep_best` still
+    run, and their results equal local mode's (PageRank up to float
+    summation order)."""
+    from pyspark.sql import DataFrame
+
+    from featurestore_spark.operators.dedup import dedup_keep_best
+    from featurestore_spark.operators.resolve import connected_components
+    from featurestore_spark.operators.web import domain_pagerank
+
+    links = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a"), ("e", "e"),
+         ("c", "f")],
+        ["src_domain", "dst_domain"],
+    )
+    cc_edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)] + [(100, 101)], ["src", "dst"]
+    )
+    fox = "the quick brown fox jumps over the lazy dog today"
+    docs = spark.createDataFrame(
+        [(0, fox, 1.0), (1, fox, 3.0), (2, fox, 2.0),
+         (3, "completely different content about query engines", 1.0),
+         (4, "completely different content about query engines", 0.5)],
+        ["doc_id", "text", "q"],
+    )
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+
+    def run():
+        pr = {
+            r["domain"]: r["pr"]
+            for r in domain_pagerank(links, iterations=4).collect()
+        }
+        old = spark.conf.get(coalesce)
+        spark.conf.set(coalesce, "false")  # force the global CC phase
+        try:
+            cc = {
+                r["id"]: r["component"]
+                for r in connected_components(cc_edges).collect()
+            }
+        finally:
+            spark.conf.set(coalesce, old)
+        kept = sorted(
+            (r["doc_id"], r["cluster_id"])
+            for r in dedup_keep_best(docs, "q", bands=8).collect()
+        )
+        return pr, cc, kept
+
+    pr, cc, kept = run()
+    assert kept == [(1, 0), (3, 3)]
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    spark.conf.set(MATERIALIZE_CONF, "reliable")
+
+    def no_local_checkpoint(self, *args, **kwargs):
+        raise AssertionError("localCheckpoint called under reliable mode")
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", no_local_checkpoint)
+    try:
+        got_pr, got_cc, got_kept = run()
+    finally:
+        spark.conf.unset(MATERIALIZE_CONF)
+    assert got_pr == pytest.approx(pr, rel=1e-12)
+    assert (got_cc, got_kept) == (cc, kept)
+    assert list((tmp_path / "ckpt").rglob("*")), "no checkpoint files written"
 
 
 def test_materialize_truncates_lineage_for_iteration(spark):

@@ -1,6 +1,10 @@
 """Tests: streaming variants (cross-checked vs batch operators via a
 real micro-batch run), pandas-batch scoring, entity resolution."""
 
+import contextlib
+import logging
+
+import pytest
 from pyspark.sql import functions as F
 
 from featurestore_spark.functions.dates import (
@@ -16,6 +20,8 @@ from featurestore_spark.streaming import (
     streaming_event_counts,
     streaming_sessionize,
 )
+
+RESOLVE_LOGGER = "featurestore_spark.operators.resolve"
 
 
 def test_streaming_sessionize_matches_batch(spark, tmp_path):
@@ -120,109 +126,249 @@ def test_connected_components_and_resolution(spark):
     assert "c3" not in rmap  # low-confidence edge dropped
 
 
+@contextlib.contextmanager
+def _multi_partition_local_phase(spark, on=True):
+    """Without AQE coalescing the local phase keeps all four shuffle
+    partitions, so a component that straddles them needs the global
+    phase. `on=False` leaves the session as it is."""
+    if not on:
+        yield
+        return
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _cc_run(edges, caplog, **kw):
+    """(labels, the call's INFO record)."""
+    with caplog.at_level(logging.INFO, logger=RESOLVE_LOGGER):
+        caplog.clear()
+        labels = {
+            r["id"]: r["component"]
+            for r in connected_components(edges, **kw).collect()
+        }
+    (rec,) = [r for r in caplog.records if r.name == RESOLVE_LOGGER]
+    return labels, rec
+
+
+def _union_find_reference(edges):
+    """Pure-Python CC reference: id -> min id of its component; NULL
+    endpoints add no edge and NULL maps to NULL."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        for x in (a, b):
+            if x is not None:
+                find(x)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    out = {x: find(x) for x in list(parent)}
+    if any(a is None or b is None for a, b in edges):
+        out[None] = None
+    return out
+
+
 def test_connected_components_exhaustion_warns_partial(spark):
-    """Contract check (VERDICT r3 #10): a chain graph with diameter >
-    max_iterations must fire the partial-labels warning, and the
-    returned labels must indeed be partial (the far end of the chain
-    has not yet received the minimum label)."""
+    """Contract check (VERDICT r3 #10): a chain graph the local phase
+    cannot settle, with more depth than `max_iterations` rounds
+    reach, must fire the partial-labels warning, and the returned
+    labels must indeed be partial (the far end of the chain has not
+    yet received the minimum label)."""
     import warnings as w
 
-    n = 12  # chain 0-1-2-...-12, diameter 12
+    n = 64  # chain 0-1-...-64, spread over four local partitions
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["src", "dst"]
     )
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        comp = connected_components(edges, max_iterations=3)
-        labels = {r["id"]: r["component"] for r in comp.collect()}
-    assert any(
-        "max_iterations" in str(c.message) for c in caught
-    ), "exhaustion warning did not fire"
-    assert len(set(labels.values())) > 1, "labels unexpectedly converged"
-    # with enough rounds the same graph fully converges, no warning
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        comp = connected_components(edges, max_iterations=n + 1)
-        labels = {r["id"]: r["component"] for r in comp.collect()}
+    with _multi_partition_local_phase(spark):
+        with w.catch_warnings(record=True) as caught:
+            w.simplefilter("always")
+            comp = connected_components(edges, max_iterations=3)
+            labels = {r["id"]: r["component"] for r in comp.collect()}
+        assert any(
+            "max_iterations" in str(c.message) for c in caught
+        ), "exhaustion warning did not fire"
+        assert len(set(labels.values())) > 1, "labels unexpectedly converged"
+        # with enough rounds the same graph fully converges, no warning
+        with w.catch_warnings(record=True) as caught:
+            w.simplefilter("always")
+            comp = connected_components(edges, max_iterations=n + 1)
+            labels = {r["id"]: r["component"] for r in comp.collect()}
     assert not any("max_iterations" in str(c.message) for c in caught)
     assert set(labels.values()) == {0}
 
 
-def test_connected_components_final_round_convergence_not_misreported(spark):
+def test_connected_components_final_round_convergence_not_misreported(
+    spark, caplog
+):
     """ADVICE r3: convergence landing exactly on the last allowed round
-    (with the change mid-probe-window) must NOT warn — the final probe
-    compares one-round delta, not delta-since-last-probe."""
+    must NOT warn — each probe compares one round with the one before
+    it. The round count comes from the call's own log record."""
     import warnings as w
 
-    # chain 0-1-2-3: last label change happens in round 3, round 4 is
-    # a no-op; old code probed round 4 against the round-0 baseline
-    # and falsely warned partial
-    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["src", "dst"])
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        comp = connected_components(
-            edges, max_iterations=4, probe_every=5
-        )
-        labels = {r["id"]: r["component"] for r in comp.collect()}
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], ["src", "dst"]
+    )
+    with _multi_partition_local_phase(spark):
+        _, rec = _cc_run(edges, caplog)
+        assert not rec.cc_settled and rec.cc_converged
+        with w.catch_warnings(record=True) as caught:
+            w.simplefilter("always")
+            labels, last = _cc_run(
+                edges, caplog, max_iterations=rec.cc_rounds
+            )
     assert not any(
         "max_iterations" in str(c.message) for c in caught
     ), [str(c.message) for c in caught]
+    assert last.cc_rounds == rec.cc_rounds and last.cc_converged
     assert set(labels.values()) == {0}
 
 
-def test_connected_components_shortcut_converges_deep_chain(spark):
-    """A 200-node chain (diameter 200) must converge within the DEFAULT
-    max_iterations=20: pointer jumping kicks in after `shortcut_after`
-    rounds and halves the remaining depth each round (round 5 measured
-    on a 10^4 chain: 11s vs an extrapolated ~33min one-hop; PLANS.md).
-    Pure one-hop propagation on the same graph must exhaust."""
+def _assert_chain_converges_in_log_rounds(spark, caplog, n):
+    """A chain spread over four local partitions needs the global
+    phase; pointer jumping on every round at least doubles the reach
+    of a label per round, so it converges within the default
+    max_iterations=20 in logged O(log n) rounds (one-hop propagation
+    would need ~n rounds)."""
+    import math
     import warnings as w
 
-    n = 200
-    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        comp = connected_components(edges)  # defaults: 20 rounds, jump@5
-        labels = {r["id"]: r["component"] for r in comp.collect()}
+    edges = spark.range(n - 1).selectExpr("id AS src", "id + 1 AS dst")
+    with _multi_partition_local_phase(spark):
+        with w.catch_warnings(record=True) as caught:
+            w.simplefilter("always")
+            labels, rec = _cc_run(edges, caplog)
     assert not any("max_iterations" in str(c.message) for c in caught)
     assert set(labels.values()) == {0} and len(labels) == n
-    # disabling the shortcut restores pure one-hop: 20 rounds < 199 hops
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        partial = connected_components(edges, shortcut_after=10**9)
-        plabels = {r["id"]: r["component"] for r in partial.collect()}
-    assert any("max_iterations" in str(c.message) for c in caught)
-    assert len(set(plabels.values())) > 1
+    assert rec.cc_partitions > 1 and not rec.cc_settled
+    assert rec.cc_converged
+    assert rec.cc_rounds <= 2 * math.ceil(math.log2(n)), rec.cc_rounds
 
 
-def test_connected_components_shortcut_equals_one_hop(spark):
-    """Jumping must not change the fixed point: same labels as pure
-    one-hop propagation on a multi-component random graph."""
+def test_connected_components_shortcut_converges_deep_chain(spark, caplog):
+    _assert_chain_converges_in_log_rounds(spark, caplog, 200)
+
+
+def test_connected_components_10k_chain_converges_in_log_rounds(
+    spark, caplog
+):
+    """PLANS.md r5 measured 11s for this chain with jumping only from
+    round 6 on, against ~33 min extrapolated for one-hop rounds."""
+    _assert_chain_converges_in_log_rounds(spark, caplog, 10**4)
+
+
+def test_connected_components_small_graph_settles_in_local_phase(
+    spark, caplog
+):
+    """A coalescible edge list runs the local phase as one partition:
+    the union-find answer is final, no global round runs."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(199)] + [(500, 501)], ["src", "dst"]
+    )
+    labels, rec = _cc_run(edges, caplog)
+    assert (rec.cc_partitions, rec.cc_settled, rec.cc_rounds) == (1, True, 1)
+    assert labels == {**{i: 0 for i in range(200)}, 500: 500, 501: 500}
+
+
+def test_connected_components_random_graphs_match_union_find(spark):
+    """30 random multi-component graphs (self-loops, duplicate and
+    reversed edges included) against a pure-Python union-find. Every
+    other graph goes through the multi-partition local phase, so the
+    one-partition answer, the settled test and the global phase are
+    all exercised."""
     import random
 
     rng = random.Random(13)
-    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
-    e = spark.createDataFrame(edges, ["src", "dst"])
-    jump = {
-        r["id"]: r["component"]
-        for r in connected_components(e, shortcut_after=0).collect()
+    for trial in range(30):
+        n = rng.randrange(2, 120)
+        edges = [
+            (rng.randrange(n), rng.randrange(n))
+            for _ in range(rng.randrange(1, n + n // 2))
+        ]
+        with _multi_partition_local_phase(spark, on=trial % 2 == 1):
+            got = {
+                r["id"]: r["component"]
+                for r in connected_components(
+                    spark.createDataFrame(edges, ["src", "dst"])
+                ).collect()
+            }
+        assert got == _union_find_reference(edges), (trial, edges)
+
+
+@pytest.mark.parametrize("multi_partition", [False, True])
+def test_connected_components_string_ids_code_point_order(
+    spark, multi_partition
+):
+    """String ids: the component label is Spark's UTF8_BINARY `min`,
+    which is Python's code-point order (not UTF-16 order: U+1F600
+    sorts after U+FFEE)."""
+    edges = [
+        ("b", "ä"), ("ä", "Z"), ("€", "ü"), ("ü", "z"),
+        ("\U0001f600", "\uffee"), ("日本", "€"),
+        ("x", "x"), ("é", "e\u0301"),
+    ]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    with _multi_partition_local_phase(spark, on=multi_partition):
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(df).collect()
+        }
+    want = _union_find_reference(edges)
+    assert got == want
+    # Spark's own min over each component agrees with Python's
+    members = spark.createDataFrame(
+        [(c, i) for i, c in want.items()], ["component", "id"]
+    )
+    spark_min = {
+        r["component"]: r["m"]
+        for r in members.groupBy("component")
+        .agg(F.min("id").alias("m"))
+        .collect()
     }
-    onehop = {
-        r["id"]: r["component"]
-        for r in connected_components(e, max_iterations=70,
-                                      shortcut_after=10**9).collect()
+    assert all(spark_min[c] == c for c in spark_min)
+
+
+@pytest.mark.parametrize("multi_partition", [False, True])
+def test_connected_components_null_endpoints(spark, multi_partition):
+    """A NULL endpoint adds no edge: the other endpoint stays a node,
+    and NULL itself gets exactly one (NULL, NULL) row."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    edges = [(1, None), (None, 2), (2, 3), (None, None), (4, 5), (None, 9)]
+    schema = StructType(
+        [StructField("src", LongType()), StructField("dst", LongType())]
+    )
+    with _multi_partition_local_phase(spark, on=multi_partition):
+        rows = connected_components(
+            spark.createDataFrame(edges, schema)
+        ).collect()
+    assert [tuple(r) for r in rows if r["id"] is None] == [(None, None)]
+    assert {r["id"]: r["component"] for r in rows} == {
+        1: 1, 2: 2, 3: 2, 4: 4, 5: 4, 9: 9, None: None,
     }
-    assert jump == onehop
 
 
-def test_connected_components_validates_probe_and_checkpoint(spark):
-    edges = spark.createDataFrame([(0, 1)], ["src", "dst"])
-    import pytest
+def test_connected_components_has_no_tuning_knobs():
+    """The two-phase algorithm needs no depth heuristic or probe
+    cadence: `max_iterations` is the only loop parameter left."""
+    import inspect
 
-    with pytest.raises(ValueError):
-        connected_components(edges, probe_every=0)
-    with pytest.raises(ValueError):
-        connected_components(edges, checkpoint_every=0)
+    params = inspect.signature(connected_components).parameters
+    assert list(params) == ["edges", "src_col", "dst_col", "max_iterations"]
+    resolve_params = inspect.signature(resolve_entities).parameters
+    assert "shortcut_after" not in resolve_params
 
 
 def test_stateful_sessionize_matches_batch_across_batches(spark, tmp_path):
