@@ -755,9 +755,10 @@ def dedup_keep_best(
     family — LSH candidates + Jaccard verify over DISTINCT texts only,
     linear rep→member star edges, connected components
     (`resolve.connected_components`: edges are verified near-dup
-    pairs, a small graph that its union-find local phase usually
-    settles in one pass, global rounds only for components that
-    straddle its partitions), then ONE row_number window per cluster
+    pairs; while AQE coalesces them into one partition its union-find
+    local phase settles them in one pass, larger edge lists add
+    global rounds for components that straddle its partitions), then
+    ONE row_number window per cluster
     for the argmax. Docs in no cluster never enter the window with a
     skewed key: cluster_id = own id, so the window partitioning is
     ~unique per row outside real clusters."""

@@ -179,21 +179,35 @@ def test_reliable_mode_never_local_checkpoints(spark, tmp_path, monkeypatch):
     assert list((tmp_path / "ckpt").rglob("*")), "no checkpoint files written"
 
 
-def test_materialize_truncates_lineage_for_iteration(spark):
+def test_materialize_truncates_lineage_for_iteration(spark, caplog):
     """Both modes must TRUNCATE lineage: an iterative consumer whose
     rounds self-join (CC pointer jumping) grows the logical plan
     geometrically otherwise — a persist()-based mode OOMed the driver
-    during analysis on exactly this shape (review r5). A 30-round
-    chain must keep the final plan tiny."""
+    during analysis on exactly this shape (review r5). A 30-edge chain
+    whose local phase keeps four partitions runs several global
+    rounds and must keep the final plan tiny."""
+    import logging
+
     from featurestore_spark.operators.resolve import connected_components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], ["src", "dst"]
     )
-    out = connected_components(edges, max_iterations=40)
-    assert {r["component"] for r in out.collect()} == {0}
+    logger = "featurestore_spark.operators.resolve"
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")  # one partition would settle it
+    try:
+        with caplog.at_level(logging.INFO, logger=logger):
+            caplog.clear()
+            out = connected_components(edges, max_iterations=40)
+            assert {r["component"] for r in out.collect()} == {0}
+    finally:
+        spark.conf.set(coalesce, old)
+    (rec,) = [r for r in caplog.records if r.name == logger]
+    assert rec.cc_rounds > 2, rec.cc_rounds  # global rounds did iterate
     # post-materialization plan is rooted at the checkpoint, not the
-    # 30-round join tree
+    # join tree of the rounds
     n_lines = len(out._jdf.queryExecution().analyzed().toString().splitlines())
     assert n_lines < 20, n_lines
 

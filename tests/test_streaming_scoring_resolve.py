@@ -236,16 +236,19 @@ def test_connected_components_final_round_convergence_not_misreported(
     assert set(labels.values()) == {0}
 
 
-def _assert_chain_converges_in_log_rounds(spark, caplog, n):
+def _assert_chain_converges_in_log_rounds(spark, caplog, n, stride=1):
     """A chain spread over four local partitions needs the global
-    phase; pointer jumping on every round at least doubles the reach
-    of a label per round, so it converges within the default
-    max_iterations=20 in logged O(log n) rounds (one-hop propagation
-    would need ~n rounds)."""
+    phase; hooking each label tree under its new minimum plus pointer
+    jumping converges within the default max_iterations=20 in logged
+    O(log n) rounds (one-hop propagation would need ~n rounds).
+    `stride` coprime to n shuffles the ids along the chain: node i is
+    id i*stride mod n."""
     import math
     import warnings as w
 
-    edges = spark.range(n - 1).selectExpr("id AS src", "id + 1 AS dst")
+    edges = spark.range(n - 1).selectExpr(
+        f"id * {stride} % {n} AS src", f"(id + 1) * {stride} % {n} AS dst"
+    )
     with _multi_partition_local_phase(spark):
         with w.catch_warnings(record=True) as caught:
             w.simplefilter("always")
@@ -269,6 +272,16 @@ def test_connected_components_10k_chain_converges_in_log_rounds(
     _assert_chain_converges_in_log_rounds(spark, caplog, 10**4)
 
 
+def test_connected_components_shuffled_chain_converges_in_log_rounds(
+    spark, caplog
+):
+    """Ids that do not grow along the path: min-label rounds with
+    pointer jumping alone moved the minimum about one hop per round
+    here and returned partial labels after max_iterations; hooking
+    keeps it logarithmic."""
+    _assert_chain_converges_in_log_rounds(spark, caplog, 2000, stride=7919)
+
+
 def test_connected_components_small_graph_settles_in_local_phase(
     spark, caplog
 ):
@@ -280,6 +293,25 @@ def test_connected_components_small_graph_settles_in_local_phase(
     labels, rec = _cc_run(edges, caplog)
     assert (rec.cc_partitions, rec.cc_settled, rec.cc_rounds) == (1, True, 1)
     assert labels == {**{i: 0 for i in range(200)}, 500: 500, 501: 500}
+
+
+def test_connected_components_without_aqe(spark, caplog):
+    """Spark drops the REBALANCE hint with AQE off, so the local phase
+    hash-partitions the edges into one partition per core itself
+    rather than inheriting the input's partitioning."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(50)] + [(100, 101)], ["src", "dst"]
+    ).repartition(8)
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        labels, rec = _cc_run(edges, caplog)
+    finally:
+        spark.conf.set(key, old)
+    assert rec.cc_partitions == spark.sparkContext.defaultParallelism
+    assert rec.cc_converged
+    assert labels == {**{i: 0 for i in range(51)}, 100: 100, 101: 100}
 
 
 def test_connected_components_random_graphs_match_union_find(spark):
